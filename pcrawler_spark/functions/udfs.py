@@ -11,7 +11,6 @@ string (JVM-side, codegen'd) so frontier/seen tables agree everywhere.
 
 from __future__ import annotations
 
-from typing import Iterable, List, Optional
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -24,7 +23,6 @@ from ..kernels import (
     extract_company_details,
     extract_company_links,
     extract_emails,
-    extract_pagination_links,
     extract_text,
     split_phones,
 )
@@ -60,11 +58,6 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
 @pandas_udf(T.ArrayType(T.StringType()))
 def extract_links_udf(html: pd.Series) -> pd.Series:
     return pd.Series([extract_company_links(h) for h in html])
-
-
-@pandas_udf(T.ArrayType(T.StringType()))
-def extract_pagination_udf(html: pd.Series) -> pd.Series:
-    return pd.Series([extract_pagination_links(h) for h in html])
 
 
 @pandas_udf(T.StringType())

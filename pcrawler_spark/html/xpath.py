@@ -50,8 +50,8 @@ class _Pred:
         self.b = b
         self.child_step = child_step
         # compile the check into a closure ONCE at parse time (patterns are
-        # parse-cached, so this is amortized over every page): the per-node
-        # string-kind dispatch in the old _pred_holds was measured hot (r7)
+        # parse-cached, so this is amortized over every page): dispatching on
+        # the predicate kind per node was measured hot (r7)
         self.check = self._compile()
 
     def _compile(self):
@@ -215,14 +215,6 @@ def _parse(path: str) -> tuple[List[_Step], Optional[str]]:
 
 def _node_test(el: Element, tag: str) -> bool:
     return tag == "*" or el.tag == tag
-
-
-def _pred_holds(el: Element, pred: _Pred) -> bool:
-    """Kept as the readable reference semantics; the hot path calls the
-    closure compiled by ``_Pred._compile`` (identical behavior)."""
-    if pred.check is None:
-        raise XPathError(f"positional predicate handled elsewhere: {pred.kind}")
-    return pred.check(el)
 
 
 def _apply_step(context: List[Element], step: _Step) -> List[Element]:

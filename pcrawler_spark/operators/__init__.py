@@ -1,5 +1,5 @@
 from .dedup import dedup_exact, dedup_keep_first, dedup_keep_last
-from .seen import anti_join_seen, bloom_prefilter
+from .seen import anti_join_seen
 from .politeness import politeness_schedule, salted_repartition
 from .export import export_contacts
 from .concomp import canonical_docs, connected_components
@@ -9,7 +9,6 @@ __all__ = [
     "dedup_keep_first",
     "dedup_keep_last",
     "anti_join_seen",
-    "bloom_prefilter",
     "politeness_schedule",
     "salted_repartition",
     "export_contacts",

@@ -4,11 +4,25 @@
   products as JVM-side ``zip_with``/``aggregate`` higher-order functions
   (no UDF), ranked per query.  Cosines are computed in double and rounded
   before ranking so results are stable across engines.
-* IVF (inverted-file) top-k — the scale path: k-means-style coarse cells
-  (here: per-label centroids, or hash-assigned cells), queries probe only
-  the nearest ``n_probe`` cells.  Cuts the candidate set by the cell fan-in
-  — on a 1000-executor cluster the cell assignment is the shuffle key, so
+* IVF (inverted-file) top-k — the scale path: coarse cells (per-label
+  centroids, or learned spherical k-means cells), queries probe only the
+  nearest ``n_probe`` cells.  Cuts the candidate set by the cell fan-in —
+  on a 1000-executor cluster the cell assignment is the shuffle key, so
   each query touches a few partitions instead of the whole corpus.
+* compressed-code scans — product quantization (PQ/ADC), IVF+PQ, true
+  IVFADC over cell residuals, and 8-bit scalar quantization (SQ8, flat or
+  behind IVF cells).  Each ranks candidates by an exact integer-ppm
+  asymmetric distance and can hand its top-``rerank`` list to an
+  exact-cosine re-rank over the full vectors.
+* near-duplicate pairs — exact all-pairs cosine and random-hyperplane LSH.
+
+Every path is assembled from one private helper per idea: ``_vecs`` /
+``_queries`` (the id + ``array<double>`` projection), ``_ranked`` /
+``_cos_topk`` (the per-query ``row_number`` top-k), ``_probe`` (the
+query × centroid ``n_probe`` window), ``_adc_table`` / ``_adc_scores`` (PQ
+lookup tables and their per-(query, doc) sums), ``_sq8_scores``,
+``_rerank`` (exact-cosine re-rank of a candidate list) and ``_lloyd`` (the
+driver-paced Lloyd loop behind both :func:`kmeans_fit` and :func:`pq_fit`).
 """
 
 from __future__ import annotations
@@ -32,6 +46,74 @@ def cosine_similarity_col(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _rcos(a, b, round_dp: int = 6):
+    return F.round(cosine_similarity_col(a, b), round_dp)
+
+
+def _sq_l2(a, b):
+    """Σ (a_i - b_i)² as a sequential JVM fold — the same summation shape
+    the DuckDB oracle replays (list_dot_product of the difference list)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0), lambda acc, v: acc + v,
+    )
+
+
+def _vecs(df: DataFrame, id_col: str, vec_col: str, id_as: str = "id",
+          vec_as: str = "v", *extra) -> DataFrame:
+    """The (id, ``array<double>`` vector) projection, plus ``extra`` columns."""
+    return df.select(
+        F.col(id_col).alias(id_as), F.col(vec_col).cast("array<double>").alias(vec_as), *extra
+    )
+
+
+def _queries(queries: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return _vecs(queries, id_col, vec_col, "query_id", "qv")
+
+
+def _ranked(df: DataFrame, order: list, k: int, name: str = "rank") -> DataFrame:
+    """The first ``k`` rows per query by ``order`` (row_number as ``name``)."""
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return df.withColumn(name, F.row_number().over(w).cast("long")).filter(F.col(name) <= k)
+
+
+def _cos_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Top-k by rounded cosine with neighbor-id tiebreak:
+    (query_id, neighbor_id, rank, cos)."""
+    return _ranked(scored, [F.col("cos").desc(), F.col("neighbor_id").asc()], k).select(
+        "query_id", "neighbor_id", "rank", "cos"
+    )
+
+
+def _rerank(corpus: DataFrame, cand: DataFrame, q: DataFrame, k: int,
+            id_col: str, vec_col: str) -> DataFrame:
+    """Exact-cosine re-rank of a (query_id, neighbor_id) candidate list on
+    FULL vectors (Jégou et al. TPAMI'11 §V.A).  The list is |queries| ×
+    rerank rows — tiny vs the corpus, so it is broadcast and the
+    full-vector side is probed in place, never shuffled; queries broadcast."""
+    scored = (
+        _vecs(corpus, id_col, vec_col, "neighbor_id", "cv")
+        .join(F.broadcast(cand), "neighbor_id")
+        .join(F.broadcast(q), "query_id")
+        .withColumn("cos", _rcos("qv", "cv"))
+    )
+    return _cos_topk(scored, k)
+
+
+def _probe(q: DataFrame, cents: DataFrame, n_probe: int) -> DataFrame:
+    """Each query's ``n_probe`` nearest cells by rounded centroid cosine
+    (cell-id tiebreak).  The centroid table is tiny and broadcast; rows
+    keep (query_id, qv, cell, centroid)."""
+    return _ranked(
+        q.crossJoin(F.broadcast(cents)).withColumn("cell_cos", _rcos("qv", "centroid")),
+        [F.col("cell_cos").desc(), F.col("cell").asc()], n_probe, name="cell_rank",
+    )
+
+
+def _cells(corpus: DataFrame, id_col: str, cell_col: str) -> DataFrame:
+    return corpus.select(F.col(id_col).alias("id"), F.col(cell_col).alias("cell"))
+
+
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
                      id_col: str = "vec_id", vec_col: str = "embedding",
                      round_dp: int = 6) -> DataFrame:
@@ -40,25 +122,13 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     Self-matches are excluded.  Ranking uses the rounded cosine with
     neighbor-id tiebreak, making the output deterministic and portable.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
     scored = (
-        q.crossJoin(c)
+        _queries(queries, id_col, vec_col)
+        .crossJoin(_vecs(corpus, id_col, vec_col, "neighbor_id", "cv"))
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", F.round(cosine_similarity_col(F.col("qv"), F.col("cv")), round_dp))
+        .withColumn("cos", _rcos(F.col("qv"), F.col("cv"), round_dp))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    return _cos_topk(scored, k)
 
 
 def cosine_near_pairs(df: DataFrame, threshold: float = 0.9,
@@ -67,40 +137,22 @@ def cosine_near_pairs(df: DataFrame, threshold: float = 0.9,
     """Embedding-cosine near-duplicate pairs — exact baseline (all pairs with
     rounded cosine ≥ threshold).  O(n²): the exactness yardstick for the
     hyperplane-LSH scale path below; at 100 TB run that one instead."""
-    e = df.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"))
+    e = _vecs(df, id_col, vec_col)
     return (
         e.alias("a").crossJoin(e.alias("b"))
         .filter(F.col("a.id") < F.col("b.id"))
-        .withColumn("cos", F.round(cosine_similarity_col(F.col("a.v"), F.col("b.v")), round_dp))
+        .withColumn("cos", _rcos(F.col("a.v"), F.col("b.v"), round_dp))
         .filter(F.col("cos") >= threshold)
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), "cos")
     )
 
 
-def _hyperplane_sign(vec, seed: int):
-    """Sign of <v, w_seed> where w_seed[i] = ±1 from the portable md5 hash —
-    deterministic pseudo-random hyperplanes both engines can reproduce.
-    Dimension-agnostic: transform-with-index, no driver-side peeking."""
-    prods = F.transform(
-        vec,
-        lambda x, i: x * F.when(
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit(f"{seed}:"), i.cast("string"))), 1, 8),
-                16, 10,
-            ).cast("long").bitwiseAND(F.lit(1)) == 1,
-            F.lit(1.0),
-        ).otherwise(F.lit(-1.0)),
-    )
-    dot = F.aggregate(prods, F.lit(0.0), lambda a, x: a + x)
-    return F.when(dot > 0, 1).otherwise(0)
-
-
 def _hyperplane_matrix(n_bits: int, dim: int) -> list[list[float]]:
-    """±1 hyperplane weights computed ONCE on the driver from the exact same
-    portable md5 rule :func:`_hyperplane_sign` evaluates per element — same
-    values, so oracles built against the md5 derivation are unchanged.  At
-    real scale this replaces n_bits × dim JVM md5 calls PER VECTOR with a
-    constant literal lookup (the round-2 judge's constant-factor finding)."""
+    """±1 hyperplane weights computed ONCE on the driver from a portable md5
+    rule — w_seed[i] = +1 iff the low bit of md5(f"{seed}:{i}")[:8] is set —
+    that any engine can reproduce (the tests replay it per element in the
+    JVM as a differential oracle).  Replaces n_bits × dim JVM md5 calls PER
+    VECTOR with a constant literal lookup."""
     out = []
     for s in range(n_bits):
         row = []
@@ -111,10 +163,10 @@ def _hyperplane_matrix(n_bits: int, dim: int) -> list[list[float]]:
     return out
 
 
-def hyperplane_lsh_pairs(df: DataFrame, threshold: float = 0.9, n_bits: int = 16,
-                         max_hamming: int = 3,
+def hyperplane_lsh_pairs(df: DataFrame, dim: int, threshold: float = 0.9,
+                         n_bits: int = 16, max_hamming: int = 3,
                          id_col: str = "vec_id", vec_col: str = "embedding",
-                         round_dp: int = 6, dim: int | None = None) -> DataFrame:
+                         round_dp: int = 6) -> DataFrame:
     """Embedding near-dup pairs at scale: random-hyperplane signatures
     (n_bits sign bits) + pigeonhole banding on the signature (any pair with
     ≤ max_hamming differing bits collides on ≥1 block) + exact cosine
@@ -123,40 +175,29 @@ def hyperplane_lsh_pairs(df: DataFrame, threshold: float = 0.9, n_bits: int = 16
     within the Hamming budget (recall measured against
     :func:`cosine_near_pairs` in tests).
 
-    ``dim``: when the embedding dimension is known (the normal case — it is
-    part of the table contract), the ±1 hyperplane matrix is precomputed on
-    the driver and signatures cost one zip_with per bit instead of per-
-    element md5 hashing; vectors of any other length fail loudly.  ``None``
-    keeps the dimension-agnostic md5 path (identical values)."""
+    ``dim`` is the embedding dimension (part of the table contract): the ±1
+    hyperplane matrix is precomputed on the driver, signatures cost one
+    zip_with per bit, and vectors of any other length fail loudly."""
     from .simdedup import simhash_blocks
 
-    e = df.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"))
-    if dim is not None:
-        e = e.withColumn(
-            "v",
-            F.when(F.size("v") == dim, F.col("v")).otherwise(
-                F.raise_error(F.lit(f"hyperplane_lsh_pairs: expected dim={dim}"))
-            ),
-        )
-        mat = _hyperplane_matrix(n_bits, dim)
-        # ONE py4j call per row (array literal from a Python list), not one
-        # per ELEMENT: the n_bits × dim F.lit storm was the dominant cost
-        # of building this plan (16×64 = 1024 driver round-trips)
-        wcols = [F.lit([float(x) for x in row]) for row in mat]
-
-        def sign_for(s: int):
-            dot = F.aggregate(
-                F.zip_with(F.col("v"), wcols[s], lambda x, w: x * w),
-                F.lit(0.0), lambda a, x: a + x,
-            )
-            return F.when(dot > 0, 1).otherwise(0)
-    else:
-        def sign_for(s: int):
-            return _hyperplane_sign(F.col("v"), s)
-
+    e = _vecs(df, id_col, vec_col)
+    e = e.withColumn(
+        "v",
+        F.when(F.size("v") == dim, F.col("v")).otherwise(
+            F.raise_error(F.lit(f"hyperplane_lsh_pairs: expected dim={dim}"))
+        ),
+    )
+    # ONE py4j call per row (array literal from a Python list), not one
+    # per ELEMENT: the n_bits × dim F.lit storm was the dominant cost
+    # of building this plan (16×64 = 1024 driver round-trips)
+    wcols = [F.lit([float(x) for x in row]) for row in _hyperplane_matrix(n_bits, dim)]
     sig = None
     for s in range(n_bits):
-        bit = sign_for(s).cast("long") * F.lit(1 << s).cast("long")
+        dot = F.aggregate(
+            F.zip_with(F.col("v"), wcols[s], lambda x, w: x * w),
+            F.lit(0.0), lambda a, x: a + x,
+        )
+        bit = F.when(dot > 0, 1).otherwise(0).cast("long") * F.lit(1 << s).cast("long")
         sig = bit if sig is None else (sig + bit)
     e = e.withColumn("sig", sig)
     blocks = F.array(*[
@@ -174,11 +215,42 @@ def hyperplane_lsh_pairs(df: DataFrame, threshold: float = 0.9, n_bits: int = 16
         .filter(F.col("a.id") < F.col("b.id"))
         .select(
             F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-            F.round(cosine_similarity_col(F.col("a.v"), F.col("b.v")), round_dp).alias("cos"),
+            _rcos(F.col("a.v"), F.col("b.v"), round_dp).alias("cos"),
         )
         .filter(F.col("cos") >= threshold)
         .distinct()
     )
+
+
+def _lloyd(cents: dict, to_df, assign, keys: list, vec: str, n_iter: int) -> DataFrame:
+    """Driver-paced Lloyd iterations shared by :func:`kmeans_fit` and
+    :func:`pq_fit`.  ``cents`` maps key tuples (values of ``keys``) to
+    centroid lists; ``to_df(cents)`` turns it into the broadcastable
+    centroid table and ``assign(table)`` returns each member's ``keys`` plus
+    its ``vec``.  Each iteration is one distributed assign + one
+    per-dimension AVG update, and only the centroid table is collected —
+    one bounded driver action per iteration, which keeps the lineage flat.
+    Centroids with no members this round keep their old value."""
+    for _ in range(n_iter):
+        upd = (
+            assign(to_df(cents))
+            .select(*keys, F.posexplode(vec).alias("pos", "val"))
+            .groupBy(*keys, "pos")
+            .agg(F.avg("val").alias("c"))
+            .collect()
+        )
+        new: dict = {}
+        for r in upd:
+            new.setdefault(tuple(r[c] for c in keys), {})[r["pos"]] = r["c"]
+        for key, by_pos in new.items():
+            cents[key] = [by_pos[p] for p in sorted(by_pos)]
+    return to_df(cents)
+
+
+def _table(spark, schema: str):
+    """``to_df`` for :func:`_lloyd`: centroid dict → DataFrame, key-sorted."""
+    return lambda cents: spark.createDataFrame(
+        [(*key, v) for key, v in sorted(cents.items())], schema)
 
 
 def assign_cells(corpus_e: DataFrame, cents: DataFrame, round_dp: int = 6) -> DataFrame:
@@ -196,7 +268,7 @@ def assign_cells(corpus_e: DataFrame, cents: DataFrame, round_dp: int = 6) -> Da
     comparison."""
     return (
         corpus_e.crossJoin(F.broadcast(cents))
-        .withColumn("_cc", F.round(cosine_similarity_col(F.col("v"), F.col("centroid")), round_dp))
+        .withColumn("_cc", _rcos(F.col("v"), F.col("centroid"), round_dp))
         .groupBy("id")
         .agg(F.max(F.struct(
             F.col("_cc"), (-F.col("cell")).alias("_nc"), F.col("cell"), F.col("v")
@@ -205,91 +277,64 @@ def assign_cells(corpus_e: DataFrame, cents: DataFrame, round_dp: int = 6) -> Da
     )
 
 
-def _maxmin_init(e: DataFrame, n_cells: int, round_dp: int = 6) -> list:
-    """Deterministic farthest-point ('maxmin', the k-means++ shape without
-    RNG) seeding: start at the min id, then repeatedly add the vector with
-    the LOWEST max-cosine to the chosen set (rounded, min-id tiebreak).
-
-    Incremental: the running max-cosine-to-chosen-set is a COLUMN updated
-    against only the NEWEST seed each round (greatest(old, cos(new)) —
-    equal to the max over all seeds since round() is applied per seed), and
-    the pick is ONE single-pass struct-min aggregation per round — no sort,
-    no per-seed rescan of the full chosen set, and the plan no longer grows
-    O(seeds) per round (lineage truncated every few picks).  n_cells-1
-    bounded 1-row driver actions total.  Returns seed rows in pick order."""
-    first = e.orderBy("id").limit(1).collect()[0]
-    seeds = [first]
-    state = e.withColumn("_maxcos", F.lit(-1.0))
-    for i in range(n_cells - 1):
-        newest = F.lit([float(x) for x in seeds[-1]["v"]])
-        state = state.withColumn(
-            "_maxcos",
-            F.greatest(
-                F.col("_maxcos"),
-                F.round(cosine_similarity_col(F.col("v"), newest), round_dp),
-            ),
-        )
-        if (i + 1) % 4 == 0:
-            state = state.localCheckpoint(eager=False)
-        # struct min orders (_maxcos asc, id asc) — id is unique, so the
-        # array field never participates in the comparison
-        far = state.select(
-            F.min(F.struct("_maxcos", "id", "v")).alias("m")
-        ).collect()[0]["m"]
-        seeds.append({"id": far["id"], "v": far["v"]})
-    return seeds
-
-
 def kmeans_fit(corpus: DataFrame, n_cells: int = 8, n_iter: int = 3,
                id_col: str = "vec_id", vec_col: str = "embedding",
-               round_dp: int = 6, init: str = "minid") -> DataFrame:
+               round_dp: int = 6) -> DataFrame:
     """LEARNED coarse cells: spherical k-means (assign = max rounded cosine,
-    update = per-dimension mean) as plain DataFrame ops — the k-means step
-    the round-2 judge called out as the remaining ANN gap (the reference has
-    no ANN at all; this is beyond-reference polish).
+    update = per-dimension mean) as plain DataFrame ops.
 
-    * init: ``"minid"`` (default, the q49 oracle contract) seeds with the
-      ``n_cells`` smallest-id vectors — deterministic and reproducible by
-      any engine (no RNG seed to ship); ``"maxmin"`` seeds by deterministic
-      farthest-point spreading (:func:`_maxmin_init`) — better-separated
-      cells on clustered data, still RNG-free;
-    * each Lloyd iteration is one distributed assign (broadcast-join +
-      window argmax) and one distributed update (posexplode + groupBy avg);
-      only the k × dim centroid table is collected per iteration to keep
-      the lineage flat — the standard iterative-algorithm pattern on Spark
-      (bounded driver actions: n_iter + 1, payload a few KB);
+    * init (the q49 oracle contract): the ``n_cells`` smallest-id vectors —
+      deterministic and reproducible by any engine (no RNG seed to ship);
+    * each Lloyd iteration is one distributed assign (:func:`assign_cells`)
+      and one distributed update (:func:`_lloyd`) — bounded driver actions:
+      n_iter + 1, payload a few KB;
     * empty cells keep their previous centroid.
 
     Returns a (cell int, centroid array<double>) DataFrame."""
-    spark = corpus.sparkSession
-    e = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
+    e = _vecs(corpus, id_col, vec_col)
+    cents = {(i,): list(r["v"]) for i, r in enumerate(e.orderBy("id").limit(n_cells).collect())}
+    return _lloyd(
+        cents, _table(corpus.sparkSession, "cell int, centroid array<double>"),
+        lambda c: assign_cells(e, c, round_dp), ["cell"], "v", n_iter,
     )
-    if init == "maxmin":
-        seed_rows = _maxmin_init(e, n_cells, round_dp)
-    else:
-        seed_rows = e.orderBy("id").limit(n_cells).collect()
-    cents = {i: list(r["v"]) for i, r in enumerate(seed_rows)}
 
-    def cdf():
-        return spark.createDataFrame(
-            sorted(cents.items()), "cell int, centroid array<double>")
 
-    for _ in range(n_iter):
-        assigned = assign_cells(e, cdf(), round_dp)
-        upd = (
-            assigned.select("cell", F.posexplode("v").alias("pos", "val"))
-            .groupBy("cell", "pos")
-            .agg(F.avg("val").alias("c"))
-            .collect()
-        )
-        new = {}
-        for r in upd:
-            new.setdefault(r["cell"], {})[r["pos"]] = r["c"]
-        for cell, by_pos in new.items():
-            cents[cell] = [by_pos[p] for p in sorted(by_pos)]
-        # cells absent from `new` (no members this round) keep old centroids
-    return cdf()
+def ivf_build(corpus: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
+              cell_col: str = "label") -> DataFrame:
+    """Coarse-cell centroids (here cells = the given column; :func:`kmeans_fit`
+    produces the same shape).  Returns (cell, centroid array<double>)."""
+    exploded = corpus.select(
+        F.col(cell_col).alias("cell"), F.posexplode(F.col(vec_col).cast("array<double>"))
+    )
+    return (
+        exploded.groupBy("cell", "pos")
+        .agg(F.avg("col").alias("v"))
+        .groupBy("cell")
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "v"))).alias("pv"))
+        .select("cell", F.transform("pv", lambda s: s["v"]).alias("centroid"))
+    )
+
+
+def _ivf_cos_topk(q: DataFrame, cents: DataFrame, members: DataFrame,
+                  n_probe: int, k: int) -> DataFrame:
+    """Exact cosine top-k over the ``members`` (neighbor_id, cv, cell) of
+    each query's ``n_probe`` nearest cells."""
+    scored = (
+        _probe(q, cents, n_probe).select("query_id", "qv", "cell")
+        .join(members, on="cell")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("cos", _rcos("qv", "cv"))
+    )
+    return _cos_topk(scored, k)
+
+
+def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5, n_probe: int = 2,
+             id_col: str = "vec_id", vec_col: str = "embedding",
+             cell_col: str = "label") -> DataFrame:
+    """ANN: probe the n_probe nearest cells only, exact rank within them."""
+    members = _vecs(corpus, id_col, vec_col, "neighbor_id", "cv", F.col(cell_col).alias("cell"))
+    return _ivf_cos_topk(_queries(queries, id_col, vec_col),
+                         ivf_build(corpus, id_col, vec_col, cell_col), members, n_probe, k)
 
 
 def ivf_topk_learned(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -300,55 +345,35 @@ def ivf_topk_learned(corpus: DataFrame, queries: DataFrame, k: int = 5,
     shape as :func:`ivf_topk` but the cells come from :func:`kmeans_fit`
     instead of a pre-existing label column."""
     cents = kmeans_fit(corpus, n_cells, n_iter, id_col, vec_col)
-    e = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    assigned = assign_cells(e, cents).select(
+    members = assign_cells(_vecs(corpus, id_col, vec_col), cents).select(
         F.col("id").alias("neighbor_id"), F.col("v").alias("cv"), "cell"
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(F.col("cell_cos").desc(), F.col("cell").asc())
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("cell_cos", F.round(cosine_similarity_col("qv", "centroid"), 6))
-        .withColumn("cell_rank", F.row_number().over(probe_w))
-        .filter(F.col("cell_rank") <= n_probe)
-        .select("query_id", "qv", "cell")
-    )
-    scored = (
-        probes.join(assigned, on="cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", F.round(cosine_similarity_col("qv", "cv"), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
+    return _ivf_cos_topk(_queries(queries, id_col, vec_col), cents, members, n_probe, k)
+
+
+def _subvectors(df: DataFrame, m_sub: int, sub_dim: int, keys=("id",),
+                vec: str = "v") -> DataFrame:
+    """(*keys, sub, sv) rows: contiguous ``sub_dim``-wide slices of ``vec``."""
+    slices = F.explode(F.array(*[
+        F.struct(F.lit(s).alias("sub"), F.slice(F.col(vec), s * sub_dim + 1, sub_dim).alias("sv"))
+        for s in range(m_sub)
+    ]))
+    return df.select(*keys, slices.alias("_s")).select(*keys, "_s.sub", "_s.sv")
+
+
+def _nearest_code(sv: DataFrame, codebook: DataFrame, round_dp: int, *carry) -> DataFrame:
+    """(id, sub, code, *carry): each (id, sub) subvector's nearest codebook
+    entry by rounded squared L2, code-id tiebreak.  The argmin is ONE
+    map-side-combinable struct-min aggregation, not a row_number window
+    (r7): the n_codes candidate rows per (id, sub) combine before the
+    exchange and the per-partition sort disappears.  (_d, code) is unique
+    within the group, so ``carry`` fields ride along without being compared."""
     return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
-
-
-def _sq_l2(a, b):
-    """Σ (a_i - b_i)² as a sequential JVM fold — the same summation shape
-    the DuckDB oracle replays (list_dot_product of the difference list)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, v: acc + v,
-    )
-
-
-def _explode_subvectors(vec_col, m_sub: int, sub_dim: int):
-    """(sub, sv) pairs: contiguous ``sub_dim``-wide slices of the vector."""
-    return F.explode(
-        F.array(*[
-            F.struct(
-                F.lit(s).alias("sub"),
-                F.slice(vec_col, s * sub_dim + 1, sub_dim).alias("sv"),
-            )
-            for s in range(m_sub)
-        ])
+        sv.join(F.broadcast(codebook), "sub")
+        .withColumn("_d", F.round(_sq_l2(F.col("sv"), F.col("cvec")), round_dp))
+        .groupBy("id", "sub")
+        .agg(F.min(F.struct("_d", "code", *carry)).alias("_m"))
+        .select("id", "sub", "_m.code", *[f"_m.{c}" for c in carry])
     )
 
 
@@ -386,10 +411,7 @@ def pq_fit(corpus: DataFrame, dim: int, m_sub: int = 4, n_codes: int = 8,
     if dim % m_sub:
         raise ValueError(f"dim={dim} not divisible by m_sub={m_sub}")
     sub_dim = dim // m_sub
-    spark = corpus.sparkSession
-    e = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
+    e = _vecs(corpus, id_col, vec_col)
     init_rows = None
     if fit_sample_mod:
         from .simdedup import _h32
@@ -409,8 +431,7 @@ def pq_fit(corpus: DataFrame, dim: int, m_sub: int = 4, n_codes: int = 8,
                 init_rows = rows
         elif sampled.limit(n_codes).count() >= n_codes:
             e = sampled
-    sv = e.select("id", _explode_subvectors(F.col("v"), m_sub, sub_dim).alias("_s")) \
-          .select("id", "_s.sub", "_s.sv")
+    sv = _subvectors(e, m_sub, sub_dim)
 
     if init == "distinct":
         # per-subspace first-n_codes DISTINCT subvectors (by min owning id):
@@ -436,83 +457,66 @@ def pq_fit(corpus: DataFrame, dim: int, m_sub: int = 4, n_codes: int = 8,
             (s, c): list(r["v"])[s * sub_dim:(s + 1) * sub_dim]
             for c, r in enumerate(rows0) for s in range(m_sub)
         }
-
-    def cdf():
-        return spark.createDataFrame(
-            [(s, c, v) for (s, c), v in sorted(cb.items())],
-            "sub int, code int, cvec array<double>",
-        )
-
-    # argmin code per (id, sub) as ONE map-side-combinable struct-min
-    # aggregation instead of a row_number window (r7): the n_codes-wide
-    # candidate rows combine before the exchange and the sort disappears.
-    # (_d, code) is unique within the group, so the sv field rides along
-    # without ever being compared.
-    for _ in range(n_iter):
-        assigned = (
-            sv.join(F.broadcast(cdf()), "sub")
-            .withColumn("_d", F.round(_sq_l2(F.col("sv"), F.col("cvec")), round_dp))
-            .groupBy("id", "sub")
-            .agg(F.min(F.struct("_d", "code", "sv")).alias("_m"))
-            .select("sub", F.col("_m.code").alias("code"), F.col("_m.sv").alias("sv"))
-        )
-        upd = (
-            assigned.select("sub", "code", F.posexplode("sv").alias("pos", "val"))
-            .groupBy("sub", "code", "pos")
-            .agg(F.avg("val").alias("c"))
-            .collect()
-        )
-        new: dict = {}
-        for r in upd:
-            new.setdefault((r["sub"], r["code"]), {})[r["pos"]] = r["c"]
-        for key, by_pos in new.items():
-            cb[key] = [by_pos[p] for p in sorted(by_pos)]
-        # codes absent from `new` (no members this round) keep old centroids
-    return cdf()
+    return _lloyd(
+        cb, _table(corpus.sparkSession, "sub int, code int, cvec array<double>"),
+        lambda c: _nearest_code(sv, c, round_dp, "sv"), ["sub", "code"], "sv", n_iter,
+    )
 
 
 def pq_encode(corpus: DataFrame, codebook: DataFrame, dim: int, m_sub: int,
               id_col: str = "vec_id", vec_col: str = "embedding",
               round_dp: int = 6) -> DataFrame:
     """(id, sub, code): each subvector assigned to its nearest codebook
-    entry (rounded L2, code tiebreak).  This is the compressed corpus —
-    m_sub small ints per vector.
+    entry (:func:`_nearest_code`).  This is the compressed corpus — m_sub
+    small ints per vector; at 10^10 vectors this stage touches every
+    vector, so its map-side argmin matters.  Pinned by the q53/q54/q58
+    oracles."""
+    sv = _subvectors(_vecs(corpus, id_col, vec_col), m_sub, dim // m_sub)
+    return _nearest_code(sv, codebook, round_dp)
 
-    The argmin is a map-side-combinable struct-min aggregation, not a
-    row_number window (r7): the n_codes candidate rows per (id, sub)
-    combine before the exchange and the per-partition sort disappears —
-    at 10^10 vectors this stage touches every vector, so the win scales
-    with the corpus.  Identical output (q53/q54/q58 oracles)."""
-    sub_dim = dim // m_sub
-    e = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    sv = e.select("id", _explode_subvectors(F.col("v"), m_sub, sub_dim).alias("_s")) \
-          .select("id", "_s.sub", "_s.sv")
+
+def _adc_table(q: DataFrame, cb: DataFrame, m_sub: int, sub_dim: int,
+               keys=("query_id",), vec: str = "qv") -> DataFrame:
+    """Per-query ADC lookup table (*keys, sub, code, d_ppm): squared L2
+    from each query subvector (of ``vec`` — the query, or its residual
+    against a probed cell) to each codebook entry, floored to integer ppm.
+    m_sub × n_codes rows per key — tiny, always broadcast."""
     return (
-        sv.join(F.broadcast(codebook), "sub")
-        .withColumn("_d", F.round(_sq_l2(F.col("sv"), F.col("cvec")), round_dp))
-        .groupBy("id", "sub")
-        .agg(F.min(F.struct("_d", "code")).alias("_m"))
-        .select("id", "sub", F.col("_m.code").alias("code"))
-    )
-
-
-def _adc_table(q: DataFrame, cb: DataFrame, m_sub: int, sub_dim: int) -> DataFrame:
-    """Per-query ADC lookup table (query_id, sub, code, d_ppm): squared L2
-    from each query subvector to each codebook entry, floored to integer
-    ppm.  m_sub × n_codes rows per query — tiny, always broadcast."""
-    qsv = q.select(
-        "query_id", _explode_subvectors(F.col("qv"), m_sub, sub_dim).alias("_s")
-    ).select("query_id", "_s.sub", "_s.sv")
-    return (
-        qsv.join(F.broadcast(cb), "sub")
+        _subvectors(q, m_sub, sub_dim, keys, vec)
+        .join(F.broadcast(cb), "sub")
         .select(
-            "query_id", "sub", "code",
+            *keys, "sub", "code",
             F.floor(F.lit(1_000_000.0) * _sq_l2(F.col("sv"), F.col("cvec")))
             .cast("long").alias("d_ppm"),
         )
     )
+
+
+def _adc_scores(enc: DataFrame, dt: DataFrame, on: list) -> DataFrame:
+    """(query_id, neighbor_id, adist_ppm): the encoded corpus streams
+    map-side against the broadcast ADC table, and a doc's distance is the
+    SUM of its per-sub lookups — an exact long (floor-ppm per sub), so the
+    sum is order-free and bit-identical across engines.  Self-pairs
+    excluded."""
+    return (
+        enc.join(F.broadcast(dt), on)
+        .filter(F.col("query_id") != F.col("id"))
+        .groupBy("query_id", F.col("id").alias("neighbor_id"))
+        .agg(F.sum("d_ppm").alias("adist_ppm"))
+    )
+
+
+def _adc_topk(scored: DataFrame, k: int, rerank: int | None, corpus: DataFrame,
+              q: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """Top-k by ``adist_ppm`` (neighbor-id tiebreak) →
+    (query_id, neighbor_id, rank, adist_ppm); with ``rerank`` the top-
+    ``rerank`` candidates go through :func:`_rerank` instead →
+    (query_id, neighbor_id, rank, cos)."""
+    adc = _ranked(scored, [F.col("adist_ppm").asc(), F.col("neighbor_id").asc()],
+                  k if rerank is None else rerank)
+    if rerank is None:
+        return adc.select("query_id", "neighbor_id", "rank", "adist_ppm")
+    return _rerank(corpus, adc.select("query_id", "neighbor_id"), q, k, id_col, vec_col)
 
 
 def ivf_pq_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
@@ -527,9 +531,9 @@ def ivf_pq_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
     are the ``cell_col`` column (same contract as :func:`ivf_topk`; swap in
     :func:`kmeans_fit` cells for the learned variant).  With ``rerank``
     set, the ADC top-``rerank`` candidates get the exact-cosine re-rank
-    stage (:func:`pq_rerank_topk`'s second stage) — the full FAISS-style
-    IVF→ADC→re-rank composition; the full-vector probe still touches only
-    the broadcast candidate list, never an unprobed cell.
+    stage — the full FAISS-style IVF→ADC→re-rank composition; the
+    full-vector probe still touches only the broadcast candidate list,
+    never an unprobed cell.
 
     Plan: centroids and ADC tables broadcast; the encoded corpus is
     partitioned by cell, so a probe is a partition-pruned join, and the
@@ -537,61 +541,15 @@ def ivf_pq_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
 
     Returns (query_id, neighbor_id, rank, adist_ppm) — or
     (query_id, neighbor_id, rank, cos) when ``rerank`` is set."""
-    sub_dim = dim // m_sub
     cents = ivf_build(corpus, id_col, vec_col, cell_col)
     cb = pq_fit(corpus, dim, m_sub, n_codes, n_iter, id_col, vec_col)
-    enc = pq_encode(corpus, cb, dim, m_sub, id_col, vec_col)
-    encl = enc.join(
-        corpus.select(F.col(id_col).alias("id"), F.col(cell_col).alias("cell")), "id"
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.col("cell_cos").desc(), F.col("cell").asc()
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("cell_cos", F.round(cosine_similarity_col("qv", "centroid"), 6))
-        .withColumn("cell_rank", F.row_number().over(probe_w))
-        .filter(F.col("cell_rank") <= n_probe)
-        .select("query_id", "cell")
-    )
-    dt = _adc_table(q, cb, m_sub, sub_dim)
-    scored = (
-        encl.join(F.broadcast(probes), "cell")
-        .filter(F.col("query_id") != F.col("id"))
-        .join(F.broadcast(dt), ["query_id", "sub", "code"])
-        .groupBy("query_id", F.col("id").alias("neighbor_id"))
-        .agg(F.sum("d_ppm").alias("adist_ppm"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist_ppm").asc(), F.col("neighbor_id").asc()
-    )
-    adc = (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= (k if rerank is None else rerank))
-    )
-    if rerank is None:
-        return adc.select("query_id", "neighbor_id", "rank", "adist_ppm")
-    cand = adc.select("query_id", "neighbor_id")
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    rescored = (
-        c.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("cos", F.round(cosine_similarity_col("qv", "cv"), 6))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    enc = pq_encode(corpus, cb, dim, m_sub, id_col, vec_col).join(
+        _cells(corpus, id_col, cell_col), "id")
+    q = _queries(queries, id_col, vec_col)
+    probes = _probe(q, cents, n_probe).select("query_id", "cell")
+    scored = _adc_scores(enc.join(F.broadcast(probes), "cell"),
+                         _adc_table(q, cb, m_sub, dim // m_sub), ["query_id", "sub", "code"])
+    return _adc_topk(scored, k, rerank, corpus, q, id_col, vec_col)
 
 
 def pq_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
@@ -606,35 +564,19 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
     rescan.  Plan shape at 10^10 vectors: the encoded corpus streams
     map-side against the broadcast table (no shuffle), one partial-agg sum
     per (query, doc), one top-k window.  Combine with the IVF cell filter
-    (:func:`ivf_topk_learned`) to prune candidates before the ADC scan.
+    (:func:`ivf_pq_topk`) to prune candidates before the ADC scan.
 
     Per-sub distances are floored to integer ppm (the floor-ppm discipline
     of textstats) so the cross-doc SUM is an exact long — order-free and
     bit-identical across engines.
 
     Returns (query_id, neighbor_id, rank, adist_ppm)."""
-    sub_dim = dim // m_sub
     cb = pq_fit(corpus, dim, m_sub, n_codes, n_iter, id_col, vec_col,
                 fit_sample_mod=fit_sample_mod)
     enc = pq_encode(corpus, cb, dim, m_sub, id_col, vec_col)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
-    )
-    dt = _adc_table(q, cb, m_sub, sub_dim)
-    scored = (
-        enc.join(F.broadcast(dt), ["sub", "code"])
-        .filter(F.col("query_id") != F.col("id"))
-        .groupBy("query_id", F.col("id").alias("neighbor_id"))
-        .agg(F.sum("d_ppm").alias("adist_ppm"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist_ppm").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adist_ppm")
-    )
+    q = _queries(queries, id_col, vec_col)
+    scored = _adc_scores(enc, _adc_table(q, cb, m_sub, dim // m_sub), ["sub", "code"])
+    return _adc_topk(scored, k, None, corpus, q, id_col, vec_col)
 
 
 def ivf_pq_residual_topk(corpus: DataFrame, queries: DataFrame, dim: int,
@@ -662,16 +604,11 @@ def ivf_pq_residual_topk(corpus: DataFrame, queries: DataFrame, dim: int,
 
     Returns (query_id, neighbor_id, rank, adist_ppm) — or
     (query_id, neighbor_id, rank, cos) when ``rerank`` is set."""
-    sub_dim = dim // m_sub
     cents = ivf_build(corpus, id_col, vec_col, cell_col)
-    e = corpus.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-        F.col(cell_col).alias("cell"),
-    )
-    resid = e.join(F.broadcast(cents), "cell").select(
-        "id", "cell",
-        F.zip_with("v", "centroid", lambda a, b: a - b).alias("rv"),
+    resid = (
+        _vecs(corpus, id_col, vec_col, "id", "v", F.col(cell_col).alias("cell"))
+        .join(F.broadcast(cents), "cell")
+        .select("id", "cell", F.zip_with("v", "centroid", lambda a, b: a - b).alias("rv"))
     )
     # distinct init: residuals of a tight cell are all-zero outside its
     # spread dims, so min-id init would hand some subspaces n_codes copies
@@ -681,66 +618,14 @@ def ivf_pq_residual_topk(corpus: DataFrame, queries: DataFrame, dim: int,
     enc = pq_encode(resid, cb, dim, m_sub, id_col="id", vec_col="rv").join(
         resid.select("id", "cell"), "id"
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.col("cell_cos").desc(), F.col("cell").asc()
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("cell_cos", F.round(cosine_similarity_col("qv", "centroid"), 6))
-        .withColumn("cell_rank", F.row_number().over(probe_w))
-        .filter(F.col("cell_rank") <= n_probe)
-        .select(
-            "query_id", "cell",
-            F.zip_with("qv", "centroid", lambda a, b: a - b).alias("qrv"),
-        )
+    q = _queries(queries, id_col, vec_col)
+    probes = _probe(q, cents, n_probe).select(
+        "query_id", "cell", F.zip_with("qv", "centroid", lambda a, b: a - b).alias("qrv"),
     )
     # per-(query, probed cell) ADC table over the QUERY RESIDUAL
-    qsv = probes.select(
-        "query_id", "cell",
-        _explode_subvectors(F.col("qrv"), m_sub, sub_dim).alias("_s"),
-    ).select("query_id", "cell", "_s.sub", "_s.sv")
-    dt = qsv.join(F.broadcast(cb), "sub").select(
-        "query_id", "cell", "sub", "code",
-        F.floor(F.lit(1_000_000.0) * _sq_l2(F.col("sv"), F.col("cvec")))
-        .cast("long").alias("d_ppm"),
-    )
-    scored = (
-        enc.join(F.broadcast(dt), ["cell", "sub", "code"])
-        .filter(F.col("query_id") != F.col("id"))
-        .groupBy("query_id", F.col("id").alias("neighbor_id"))
-        .agg(F.sum("d_ppm").alias("adist_ppm"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist_ppm").asc(), F.col("neighbor_id").asc()
-    )
-    adc = (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= (k if rerank is None else rerank))
-    )
-    if rerank is None:
-        return adc.select("query_id", "neighbor_id", "rank", "adist_ppm")
-    cand = adc.select("query_id", "neighbor_id")
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    rescored = (
-        c.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("cos", F.round(cosine_similarity_col("qv", "cv"), 6))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    dt = _adc_table(probes, cb, m_sub, dim // m_sub, keys=("query_id", "cell"), vec="qrv")
+    scored = _adc_scores(enc, dt, ["cell", "sub", "code"])
+    return _adc_topk(scored, k, rerank, corpus, q, id_col, vec_col)
 
 
 def pq_rerank_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
@@ -756,36 +641,16 @@ def pq_rerank_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
     rerank/|corpus| of the data.
 
     Scale shape: stage 1 is :func:`pq_topk`'s map-side ADC (corpus touched
-    only via (id, sub, code)); stage 2 joins the rerank×|queries| candidate
-    ids (tiny) back to the corpus — a shuffle-hash join keyed on id whose
-    probe side is the candidate list, never a rescan; queries broadcast.
+    only via (id, sub, code)); stage 2 (:func:`_rerank`) joins the
+    rerank×|queries| candidate ids (tiny, broadcast) back to the corpus —
+    never a rescan; queries broadcast.
 
     Returns (query_id, neighbor_id, rank, cos)."""
     cand = pq_topk(corpus, queries, dim, k=rerank, m_sub=m_sub,
                    n_codes=n_codes, n_iter=n_iter, id_col=id_col,
                    vec_col=vec_col,
                    fit_sample_mod=fit_sample_mod).select("query_id", "neighbor_id")
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    # the candidate list is |queries| × rerank rows — tiny vs the corpus, so
-    # broadcast it: the full-vector side is probed in place, never shuffled
-    scored = (
-        c.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("cos", F.round(cosine_similarity_col("qv", "cv"), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    return _rerank(corpus, cand, _queries(queries, id_col, vec_col), k, id_col, vec_col)
 
 
 def sq8_fit(corpus: DataFrame, id_col: str = "vec_id",
@@ -838,6 +703,30 @@ def sq8_encode(corpus: DataFrame, bounds: DataFrame, id_col: str = "vec_id",
     return corpus.select(F.col(id_col).alias("id"), codes.alias("codes"))
 
 
+def _sq8_codes(corpus: DataFrame, id_col: str, vec_col: str):
+    """Fit + encode the corpus once: (encoded frame, vmin[], scale[])."""
+    bounds = sq8_fit(corpus, id_col, vec_col)
+    vmin, scale = _sq8_bounds_arrays(bounds)
+    return sq8_encode(corpus, bounds, id_col, vec_col, _arrays=(vmin, scale)), vmin, scale
+
+
+def _sq8_scores(pairs: DataFrame, vmin, scale) -> DataFrame:
+    """Asymmetric SQ8 distance for each (query, doc) pair row — the full-
+    precision query ``qv`` against the doc's ``codes`` decoded on the fly
+    inside the fold — as floor-ppm squared L2 (``adist_ppm``).  Self-pairs
+    excluded; the doc ``id`` becomes ``neighbor_id``."""
+    decoded = F.transform(
+        F.col("codes"),
+        lambda c, i: F.element_at(vmin, i + 1) + c.cast("double") * F.element_at(scale, i + 1),
+    )
+    return (
+        pairs.filter(F.col("query_id") != F.col("id"))
+        .withColumn("adist_ppm",
+                    F.floor(F.lit(1_000_000.0) * _sq_l2(decoded, F.col("qv"))).cast("long"))
+        .withColumnRenamed("id", "neighbor_id")
+    )
+
+
 def sq8_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
              rerank: int | None = None, id_col: str = "vec_id",
              vec_col: str = "embedding") -> DataFrame:
@@ -854,57 +743,10 @@ def sq8_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     :func:`ivf_sq8_topk` — SQ8 replaces the codes, not the index.
 
     Returns (query_id, neighbor_id, rank, adist_ppm), or cos with rerank."""
-    bounds = sq8_fit(corpus, id_col, vec_col)
-    vmin, scale = _sq8_bounds_arrays(bounds)
-    enc = sq8_encode(corpus, bounds, id_col, vec_col, _arrays=(vmin, scale))
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    decoded = F.transform(
-        F.col("codes"),
-        lambda c, i: F.element_at(vmin, i + 1)
-        + c.cast("double") * F.element_at(scale, i + 1),
-    )
-    scored = (
-        enc.crossJoin(F.broadcast(q))
-        .filter(F.col("query_id") != F.col("id"))
-        .withColumn(
-            "adist_ppm",
-            F.floor(F.lit(1_000_000.0) * F.aggregate(
-                F.zip_with(decoded, F.col("qv"), lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0), lambda acc, x: acc + x,
-            )).cast("long"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist_ppm").asc(), F.col("id").asc()
-    )
-    adc = (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= (k if rerank is None else rerank))
-        .select("query_id", F.col("id").alias("neighbor_id"), "rank", "adist_ppm")
-    )
-    if rerank is None:
-        return adc
-    cand = adc.select("query_id", "neighbor_id")
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    rescored = (
-        c.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("cos", F.round(cosine_similarity_col("qv", "cv"), 6))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    enc, vmin, scale = _sq8_codes(corpus, id_col, vec_col)
+    q = _queries(queries, id_col, vec_col)
+    scored = _sq8_scores(enc.crossJoin(F.broadcast(q)), vmin, scale)
+    return _adc_topk(scored, k, rerank, corpus, q, id_col, vec_col)
 
 
 def ivf_sq8_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -931,118 +773,9 @@ def ivf_sq8_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     Returns (query_id, neighbor_id, rank, adist_ppm) — or
     (query_id, neighbor_id, rank, cos) when ``rerank`` is set."""
     cents = ivf_build(corpus, id_col, vec_col, cell_col)
-    bounds = sq8_fit(corpus, id_col, vec_col)
-    vmin, scale = _sq8_bounds_arrays(bounds)
-    enc = sq8_encode(corpus, bounds, id_col, vec_col, _arrays=(vmin, scale)).join(
-        corpus.select(F.col(id_col).alias("id"), F.col(cell_col).alias("cell")), "id"
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.col("cell_cos").desc(), F.col("cell").asc()
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("cell_cos", F.round(cosine_similarity_col("qv", "centroid"), 6))
-        .withColumn("cell_rank", F.row_number().over(probe_w))
-        .filter(F.col("cell_rank") <= n_probe)
-        .select("query_id", "cell")
-    )
-    decoded = F.transform(
-        F.col("codes"),
-        lambda c, i: F.element_at(vmin, i + 1)
-        + c.cast("double") * F.element_at(scale, i + 1),
-    )
-    scored = (
-        enc.join(F.broadcast(probes), "cell")
-        .join(F.broadcast(q), "query_id")
-        .filter(F.col("query_id") != F.col("id"))
-        .withColumn(
-            "adist_ppm",
-            F.floor(F.lit(1_000_000.0) * F.aggregate(
-                F.zip_with(decoded, F.col("qv"), lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0), lambda acc, x: acc + x,
-            )).cast("long"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist_ppm").asc(), F.col("id").asc()
-    )
-    adc = (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= (k if rerank is None else rerank))
-        .select("query_id", F.col("id").alias("neighbor_id"), "rank", "adist_ppm")
-    )
-    if rerank is None:
-        return adc
-    cand = adc.select("query_id", "neighbor_id")
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    rescored = (
-        c.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("cos", F.round(cosine_similarity_col("qv", "cv"), 6))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
-
-
-def ivf_build(corpus: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
-              cell_col: str = "label") -> DataFrame:
-    """Coarse-cell centroids (here cells = the given column; a k-means step
-    would produce the same shape).  Returns (cell, centroid array<double>)."""
-    exploded = corpus.select(
-        F.col(cell_col).alias("cell"), F.posexplode(F.col(vec_col).cast("array<double>"))
-    )
-    return (
-        exploded.groupBy("cell", "pos")
-        .agg(F.avg("col").alias("v"))
-        .groupBy("cell")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "v"))).alias("pv"))
-        .select("cell", F.transform("pv", lambda s: s["v"]).alias("centroid"))
-    )
-
-
-def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5, n_probe: int = 2,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             cell_col: str = "label") -> DataFrame:
-    """ANN: probe the n_probe nearest cells only, exact rank within them."""
-    cents = ivf_build(corpus, id_col, vec_col, cell_col)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(F.col("cell_cos").desc(), F.col("cell").asc())
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("cell_cos", F.round(cosine_similarity_col("qv", "centroid"), 6))
-        .withColumn("cell_rank", F.row_number().over(probe_w))
-        .filter(F.col("cell_rank") <= n_probe)
-        .select("query_id", "qv", "cell")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-        F.col(cell_col).alias("cell"),
-    )
-    scored = (
-        probes.join(c, on="cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", F.round(cosine_similarity_col("qv", "cv"), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    enc, vmin, scale = _sq8_codes(corpus, id_col, vec_col)
+    enc = enc.join(_cells(corpus, id_col, cell_col), "id")
+    q = _queries(queries, id_col, vec_col)
+    probes = _probe(q, cents, n_probe).select("query_id", "cell")
+    pairs = enc.join(F.broadcast(probes), "cell").join(F.broadcast(q), "query_id")
+    return _adc_topk(_sq8_scores(pairs, vmin, scale), k, rerank, corpus, q, id_col, vec_col)

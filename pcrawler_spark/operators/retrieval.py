@@ -48,6 +48,10 @@ def bm25_topk(docs: DataFrame, terms: Sequence[str], k: int = 20,
     dl = toks.groupBy("_id").agg(F.count(F.lit(1)).alias("dl"))
     stats = dl.agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("tot")).collect()[0]
     n_docs = int(stats["n"])
+    if n_docs == 0:  # no documents: nothing to rank (and Σdl is NULL)
+        return docs.select(
+            F.col(id_col), *[F.lit(0).cast("long").alias(c) for c in ("score_ppm", "n_terms_matched")]
+        ).limit(0)
     avgdl = float(stats["tot"]) / float(stats["n"])
 
     qt = toks.where(F.col("tok").isin(*[str(t) for t in terms]))

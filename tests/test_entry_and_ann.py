@@ -63,7 +63,7 @@ def test_hyperplane_lsh_recall_on_near_dups(spark):
         vid += 1
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     exact = {(r.id_a, r.id_b) for r in cosine_near_pairs(df, threshold=0.98).collect()}
-    lsh = {(r.id_a, r.id_b) for r in hyperplane_lsh_pairs(df, threshold=0.98,
+    lsh = {(r.id_a, r.id_b) for r in hyperplane_lsh_pairs(df, dim=16, threshold=0.98,
                                                           n_bits=16, max_hamming=4).collect()}
     assert len(exact) >= 20, "clusters must produce true near-dup pairs"
     assert lsh <= exact  # the exact-cosine filter admits no false positives
@@ -71,25 +71,66 @@ def test_hyperplane_lsh_recall_on_near_dups(spark):
     assert recall >= 0.9, f"recall {recall}: {len(lsh)}/{len(exact)}"
 
 
+def _hyperplane_sign(vec, seed: int):
+    """Differential oracle for ``knn._hyperplane_matrix``: the sign bit of
+    <v, w_seed> with w_seed[i] = ±1 derived PER ELEMENT in the JVM from the
+    portable md5 rule (low bit of md5(f"{seed}:{i}")[:8]) — the
+    dimension-agnostic derivation the precomputed matrix replaced."""
+    prods = F.transform(
+        vec,
+        lambda x, i: x * F.when(
+            F.conv(
+                F.substring(F.md5(F.concat(F.lit(f"{seed}:"), i.cast("string"))), 1, 8),
+                16, 10,
+            ).cast("long").bitwiseAND(F.lit(1)) == 1,
+            F.lit(1.0),
+        ).otherwise(F.lit(-1.0)),
+    )
+    dot = F.aggregate(prods, F.lit(0.0), lambda a, x: a + x)
+    return F.when(dot > 0, 1).otherwise(0)
+
+
 def test_hyperplane_precomputed_matrix_matches_md5_path(spark):
-    """The driver-precomputed ±1 matrix (dim=...) must produce EXACTLY the
-    signatures of the per-element md5 derivation — same values, one
-    constant-factor cheaper plan — and reject wrong-dimension vectors."""
+    """The driver-precomputed ±1 matrix must produce EXACTLY the signatures
+    of the per-element md5 derivation (:func:`_hyperplane_sign`), hence
+    exactly the pairs that derivation's banding + cosine filter yields, and
+    reject wrong-dimension vectors."""
     import math
 
     import pytest
-    from pcrawler_spark.operators.knn import hyperplane_lsh_pairs
+    from pcrawler_spark.operators.knn import (
+        _hyperplane_matrix, cosine_near_pairs, hyperplane_lsh_pairs)
+    from pcrawler_spark.operators.simdedup import simhash_blocks
 
+    n_bits, max_hamming = 16, 4
     rows = [
         (i, [math.sin(0.7 * (i % 6 + 1) * (j + 1)) + 0.02 * math.sin(2.3 * i * (j + 3))
              for j in range(12)])
         for i in range(40)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    kw = dict(threshold=0.9, n_bits=16, max_hamming=4)
-    slow = {(r.id_a, r.id_b, r.cos) for r in hyperplane_lsh_pairs(df, **kw).collect()}
+    v = F.col("embedding")
+    bits = [_hyperplane_sign(v, s).cast("long") * F.lit(1 << s) for s in range(n_bits)]
+    sig = bits[0]
+    for b in bits[1:]:
+        sig = sig + b
+    md5_sigs = {r.vec_id: r.sig for r in df.select("vec_id", sig.alias("sig")).collect()}
+
+    mat = _hyperplane_matrix(n_bits, 12)
+    for vid, vec in rows:
+        dots = [sum(x * w for x, w in zip(vec, mat[s])) for s in range(n_bits)]
+        assert sum(1 << s for s, d in enumerate(dots) if d > 0) == md5_sigs[vid], vid
+
+    def collide(a, b):
+        return any((a >> off) & ((1 << w) - 1) == (b >> off) & ((1 << w) - 1)
+                   for off, w in simhash_blocks(n_bits, max_hamming))
+
+    oracle = {(r.id_a, r.id_b, r.cos)
+              for r in cosine_near_pairs(df, threshold=0.9).collect()
+              if collide(md5_sigs[r.id_a], md5_sigs[r.id_b])}
+    kw = dict(threshold=0.9, n_bits=n_bits, max_hamming=max_hamming)
     fast = {(r.id_a, r.id_b, r.cos) for r in hyperplane_lsh_pairs(df, dim=12, **kw).collect()}
-    assert fast == slow and len(fast) > 0
+    assert fast == oracle and len(fast) > 0
 
     with pytest.raises(Exception, match="expected dim"):
         hyperplane_lsh_pairs(df, dim=10, **kw).collect()
@@ -172,18 +213,18 @@ def test_pq_adc_quality_and_compression(spark):
     assert all(len(r["cvec"]) == 4 for r in cb.collect())
 
 
-def test_kmeans_maxmin_bounded_actions(spark, monkeypatch):
-    """init='maxmin' must stay inside the bounded-driver-action discipline:
-    1 first-seed pick + (n_cells-1) single-pass struct-min aggs +
-    n_iter centroid updates — no per-seed sort-scan, no count/toPandas.
-    (The r3 version ran a full orderBy().limit(1) scan per seed.)"""
-    from pyspark.sql import DataFrame
-    from pcrawler_spark.operators.knn import kmeans_fit
+def test_lloyd_fits_bounded_actions(spark, monkeypatch):
+    """kmeans_fit and pq_fit share one Lloyd loop and stay inside the
+    bounded-driver-action discipline: one init collect plus one
+    centroid-table collect per iteration — no count/toPandas."""
+    from pcrawler_spark.operators.knn import kmeans_fit, pq_fit
 
     rows = [(i, [float((i * 7 + d) % 13) for d in range(8)]) for i in range(200)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    # patch the concrete class: pyspark.sql.DataFrame is only its base here
+    DataFrame = type(df)
 
-    n_cells, n_iter = 6, 2
+    n_iter = 2
     calls = {"collect": 0, "count": 0, "toPandas": 0}
     orig = {k: getattr(DataFrame, k) for k in calls}
 
@@ -195,12 +236,15 @@ def test_kmeans_maxmin_bounded_actions(spark, monkeypatch):
 
     for k in calls:
         monkeypatch.setattr(DataFrame, k, make(k))
-    cents = kmeans_fit(df, n_cells=n_cells, n_iter=n_iter, init="maxmin")
-    assert calls["count"] == 0 and calls["toPandas"] == 0, calls
-    assert calls["collect"] <= 1 + (n_cells - 1) + n_iter, calls
+    cents = kmeans_fit(df, n_cells=6, n_iter=n_iter)
+    assert calls == {"collect": 1 + n_iter, "count": 0, "toPandas": 0}, calls
+    calls.update(collect=0)
+    cb = pq_fit(df, dim=8, m_sub=2, n_codes=4, n_iter=n_iter)
+    assert calls == {"collect": 1 + n_iter, "count": 0, "toPandas": 0}, calls
     for k in calls:
         monkeypatch.setattr(DataFrame, k, orig[k])
-    assert cents.count() == n_cells
+    assert cents.count() == 6
+    assert cb.count() == 2 * 4
 
 
 def test_pq_rerank_recall_vs_bruteforce(spark):
@@ -269,39 +313,6 @@ def test_ivf_pq_prunes_to_probed_cells(spark):
         for r in res:
             if r.query_id == q:
                 assert labels[r.neighbor_id] in probed, (q, r.neighbor_id)
-
-
-def test_kmeans_maxmin_init_on_clustered_data(spark):
-    """Deterministic farthest-point init: on data whose smallest ids all sit
-    in ONE cluster (the minid-init worst case), maxmin seeding must find
-    the other clusters and beat minid's within-cluster cosine objective."""
-    from pcrawler_spark.operators.knn import assign_cells, cosine_similarity_col, kmeans_fit
-
-    import math
-    # 4 well-separated direction clusters in 8-dim; ids 0..24 ALL in cluster 0
-    rows = []
-    vid = 0
-    for c, base in enumerate([0, 2, 4, 6]):
-        for j in range(25):
-            v = [0.0] * 8
-            v[base] = 1.0
-            v[(base + 1) % 8] = 0.05 * ((j % 5) - 2)  # slight spread
-            rows.append((vid, v))
-            vid += 1
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    def objective(init):
-        cents = kmeans_fit(df, n_cells=4, n_iter=2, init=init)
-        e = df.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
-        a = assign_cells(e, cents)
-        j = a.join(cents, "cell").withColumn("cos", cosine_similarity_col("v", "centroid"))
-        return j.agg(F.avg("cos")).collect()[0][0]
-
-    o_minid = objective("minid")
-    o_maxmin = objective("maxmin")
-    assert o_maxmin > o_minid + 0.05, (o_minid, o_maxmin)
-    # and it is deterministic
-    assert objective("maxmin") == o_maxmin
 
 
 def _clustered_embeddings(spark, n_clusters=4, per=25, dim=8):

@@ -95,6 +95,18 @@ def test_bm25_hand_model(spark):
     assert got[1][0] > got[2][0]                # dense short beats sparse long
 
 
+def test_bm25_empty_corpus(spark):
+    """No documents → an empty result with the documented schema, not a
+    TypeError from averaging a NULL total length."""
+    from pcrawler_spark.operators.retrieval import bm25_topk
+
+    df = spark.createDataFrame([], "doc_id long, text string")
+    out = bm25_topk(df, ("spark", "join"), k=5)
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("doc_id", "bigint"), ("score_ppm", "bigint"), ("n_terms_matched", "bigint")]
+    assert out.collect() == []
+
+
 def test_rrf_fuse_consensus_and_exactness(spark):
     """RRF: a doc ranked by BOTH lists outranks single-list docs that beat
     it in one list; values match the independent formula exactly."""

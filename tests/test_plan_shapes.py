@@ -188,6 +188,43 @@ def test_ivf_pq_plan_no_cartesian(spark):
     assert plan.count("BroadcastNestedLoopJoin") <= 2
 
 
+# Executed-plan operator counts of the ANN queries whose knn paths share the
+# _probe / _adc_scores / _rerank helpers (AQE final plan at sf0.01 on the
+# test session's local[4], 4 shuffle partitions).  Any change to a helper
+# that adds an exchange, a window or a join — or turns a broadcast join into
+# a shuffled one — moves one of these numbers.
+ANN_PLAN_COUNTS = {
+    "q30_knn_ivf": (6, 4, 2, 3, 0),
+    "q53_pq_rerank_topk": (4, 2, 5, 0, 0),
+    "q54_ivf_pq_topk": (7, 3, 7, 1, 0),
+    "q58_ivfadc_residual": (10, 3, 8, 1, 0),
+    "q60_sq8_family": (6, 4, 5, 2, 0),
+}
+ANN_PLAN_OPS = ("Exchange", "Window", "BroadcastHashJoin",
+                "BroadcastNestedLoopJoin", "SortMergeJoin")
+
+
+def executed_op_counts(df) -> dict:
+    """Run ``df`` and count operator nodes in its final (adaptive) plan."""
+    import collections
+    import re
+
+    df.collect()
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain()
+    final = buf.getvalue().split("== Initial Plan ==")[0]
+    ops = collections.Counter(
+        m.group(1) for m in re.finditer(r"^[\s:+|-]*(?:\*\(\d+\)\s*)?([A-Za-z]+)", final, re.M))
+    return {op: ops[op] for op in ANN_PLAN_OPS}
+
+
+@pytest.mark.parametrize("name", sorted(ANN_PLAN_COUNTS))
+def test_ann_executed_plan_counts(spark, name):
+    got = executed_op_counts(entry_mod.queries()[name](spark, SF_DIR))
+    assert got == dict(zip(ANN_PLAN_OPS, ANN_PLAN_COUNTS[name])), got
+
+
 def test_repeated_spans_plan_shape(spark):
     """q61: the gram count must be a partial-agg groupBy (skew-safe: a
     boilerplate gram combines map-side, never fanning 10^8 rows into one
